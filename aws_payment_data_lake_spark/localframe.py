@@ -21,35 +21,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-# sessions already checked for the Arrow conf (ADVICE r13: the
-# LocalTableScan guarantee silently degrades to the ExistingRDD path
-# when spark.sql.execution.arrow.pyspark.enabled is off) — one conf
-# RPC per session, not per frame.
-_ARROW_CHECKED: set[str] = set()
-
-
-def _assert_arrow(spark: SparkSession) -> None:
-    key = spark.sparkContext.applicationId
-    if key in _ARROW_CHECKED:
-        return
-    if spark.conf.get("spark.sql.execution.arrow.pyspark.enabled",
-                      "false").lower() != "true":
-        raise RuntimeError(
-            "local_frame requires spark.sql.execution.arrow.pyspark."
-            "enabled=true (set by session.get_spark); without Arrow "
-            "the pandas conversion silently degrades to the "
-            "Python-RDD ExistingRDD path this helper exists to avoid")
-    _ARROW_CHECKED.add(key)
-
 
 def local_frame(spark: SparkSession, rows, ddl) -> DataFrame:
     """A ``LocalTableScan`` DataFrame from driver-side ``rows`` (list
     of tuples) with the schema given by ``ddl`` (DDL string or
-    StructType). Empty input builds the empty frame directly."""
+    StructType). Empty input builds the empty frame directly.
+
+    On a session with ``spark.sql.execution.arrow.pyspark.enabled``
+    off, Spark's own fallback converts the pandas frame row by row
+    (an ``ExistingRDD`` plan, same rows and schema): slower, never an
+    error, so a caller's session confs cannot break a query."""
     schema = StructType.fromDDL(ddl) if isinstance(ddl, str) else ddl
     if not rows:
         return spark.createDataFrame([], schema)
-    _assert_arrow(spark)
     import pandas as pd
 
     pdf = pd.DataFrame(rows, columns=[f.name for f in schema.fields])

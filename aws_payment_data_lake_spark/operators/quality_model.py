@@ -53,6 +53,8 @@ from pyspark.ml.evaluation import BinaryClassificationEvaluator
 from pyspark.ml.feature import HashingTF
 from pyspark.sql import DataFrame, SparkSession
 
+from aws_payment_data_lake_spark.sources.commit import atomic_replace
+
 NUM_FEATURES = 1 << 15
 _META_NAME = "_MODEL_META.json"
 
@@ -207,10 +209,8 @@ def save_quality_model(model: PipelineModel, store_dir: str,
     a crash mid-save leaves no marker, the next consumer retrains)."""
     path = os.path.join(store_dir, fingerprint)
     model.write().overwrite().save(path)
-    tmp = os.path.join(store_dir, f".meta-{os.getpid()}")
-    with open(tmp, "w") as fh:
-        json.dump({"fingerprint": fingerprint, "path": path}, fh)
-    os.replace(tmp, os.path.join(store_dir, _META_NAME))
+    atomic_replace(os.path.join(store_dir, _META_NAME), json.dumps(
+        {"fingerprint": fingerprint, "path": path}).encode())
 
 
 def load_quality_model(spark: SparkSession, store_dir: str,

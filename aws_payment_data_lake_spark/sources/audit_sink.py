@@ -15,9 +15,10 @@ manifest-listed files, so:
     to the reader and deleted on abort);
   * a task retried by Spark stages twice but is committed once (the
     commit message names the one surviving attempt's file);
-  * the manifest lands via temp-file + atomic rename, the same
-    commit-marker posture as sources/store.py — crash before rename =
-    nothing committed, repeated work, never a partial read.
+  * the manifest lands via ``atomic_replace`` (``sources/commit.py``:
+    fsync'd temp file + atomic rename), the same commit-marker posture
+    as sources/store.py — crash before rename = nothing committed,
+    repeated work, never a partial read.
 
 `overwrite` replaces the manifest (old data files become unreferenced
 and are removed best-effort AFTER the new manifest is live); append
@@ -50,6 +51,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
+
+from aws_payment_data_lake_spark.sources.commit import atomic_replace
 
 SINK_NAME = "payments_audit"
 _MANIFEST = "_MANIFEST.json"
@@ -125,11 +128,9 @@ class _AuditWriter(DataSourceWriter):
             files = old_files + files
             total += old.get("n_rows", 0)
             digest = (digest + old.get("digest", 0)) % _DIGEST_MOD
-        tmp = mpath + f".tmp-{self.write_id}"
-        with open(tmp, "w") as fh:
-            json.dump({"schema": self.schema_ddl, "files": files,
-                       "n_rows": total, "digest": digest}, fh)
-        os.replace(tmp, mpath)  # the commit point
+        atomic_replace(mpath, json.dumps(  # the commit point
+            {"schema": self.schema_ddl, "files": files,
+             "n_rows": total, "digest": digest}).encode())
         # sweep the staging dir: our files were just moved out; any
         # leftovers are strays from earlier ABORTED writes (abort races
         # still-running tasks, which can re-create staged files after
@@ -277,13 +278,10 @@ class _AuditStreamWriter(_AuditWriter, DataSourceStreamWriter):
                           "digest": m.digest, "batch_id": batchId})
             total += m.n_rows
             digest = (digest + m.digest) % _DIGEST_MOD
-        tmp = mpath + f".tmp-{self.write_id}-{batchId}"
-        with open(tmp, "w") as fh:
-            json.dump({"schema": self.schema_ddl, "files": files,
-                       "n_rows": total, "digest": digest,
-                       "batches": old.get("batches", []) + [batchId]},
-                      fh)
-        os.replace(tmp, mpath)
+        atomic_replace(mpath, json.dumps(
+            {"schema": self.schema_ddl, "files": files,
+             "n_rows": total, "digest": digest,
+             "batches": old.get("batches", []) + [batchId]}).encode())
         try:  # drop the staging dir when this batch emptied it
             os.rmdir(self.staging)
         except OSError:

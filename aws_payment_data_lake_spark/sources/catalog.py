@@ -13,13 +13,13 @@ OS process pointed at the same warehouse runs
 Data Catalog role, minus the service.
 
 Design: the name→entry map is itself a tiny versioned commit log,
-``<warehouse>/_catalog/<v>.json`` — the exact crash-safety recipe the
-table format already proves at scale (sources/txlog.py:597
-``_try_publish``): each commit is fsync'd to a private temp name,
-then hardlinked to its version number. The hardlink is put-if-absent
-on POSIX, so two OS processes racing a registration serialize
-cleanly: the loser re-reads the head, re-applies its mutation to the
-NEW map, and publishes the next version. Every commit carries the
+``<warehouse>/_catalog/<v>.json`` — published with the same
+``put_if_absent`` the table format's ``_try_publish`` uses
+(``sources/commit.py``): each commit is fsync'd to a private temp
+name, then hardlinked to its version number. The hardlink is
+put-if-absent on POSIX, so two OS processes racing a registration
+serialize cleanly: the loser re-reads the head, re-applies its
+mutation to the NEW map, and publishes the next version. Every commit carries the
 FULL map (a catalog is dozens of entries, not millions), so load =
 read one file — no replay walk — and history is free (``history()``
 shows who registered what when, the audit surface a real catalog
@@ -39,8 +39,9 @@ from __future__ import annotations
 import json
 import os
 import time
-import uuid
 from typing import Any, Callable
+
+from aws_payment_data_lake_spark.sources.commit import put_if_absent
 
 _CATALOG_DIR = "_catalog"
 
@@ -128,18 +129,10 @@ class CatalogLog:
     # ----------------------------------------------------------- write
     def _publish(self, version: int, commit: dict[str, Any]) -> bool:
         os.makedirs(self._dir, exist_ok=True)
-        tmp = os.path.join(self._dir, f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump(commit, f, separators=(",", ":"), sort_keys=True)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, os.path.join(self._dir, f"{version}.json"))
-            return True
-        except FileExistsError:
-            return False
-        finally:
-            os.unlink(tmp)
+        return put_if_absent(
+            os.path.join(self._dir, f"{version}.json"),
+            json.dumps(commit, separators=(",", ":"),
+                       sort_keys=True).encode())
 
     def commit(self, op: str, table: str,
                mutate: Callable[[dict[str, dict[str, Any]]],

@@ -37,6 +37,7 @@ import json
 import os
 import uuid
 
+from aws_payment_data_lake_spark.sources.commit import atomic_replace
 from aws_payment_data_lake_spark.sources.queue_source import (
     _offset_bounds,
     _partitions_of,
@@ -143,10 +144,7 @@ class ConsumerGroup:
     def _bump_generation(self) -> int:
         os.makedirs(self.gdir, exist_ok=True)
         g = self.generation() + 1
-        tmp = self._gen_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(str(g))
-        os.replace(tmp, self._gen_path())
+        atomic_replace(self._gen_path(), str(g).encode())
         return g
 
     # ------------------------------------------------------- membership
@@ -157,10 +155,7 @@ class ConsumerGroup:
         os.makedirs(d, exist_ok=True)
         path = os.path.join(d, f"{member_id}.json")
         if not os.path.exists(path):
-            tmp = os.path.join(d, f".tmp-{uuid.uuid4().hex}")
-            with open(tmp, "w") as f:
-                json.dump({"member": member_id}, f)
-            os.replace(tmp, path)
+            atomic_replace(path, json.dumps({"member": member_id}).encode())
             self._bump_generation()
         return GroupMember(self, member_id)
 

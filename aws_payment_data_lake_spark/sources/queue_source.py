@@ -14,7 +14,8 @@ as files — but everything Spark-visible IS the Kafka contract:
     `endingOffsets` the same way.
   * **`maxOffsetsPerTrigger`** rate-limits each micro-batch, spread
     across partitions proportionally to lag (Kafka's policy).
-  * **Segments are immutable once published** (tmp + atomic rename),
+  * **Segments are immutable once published** (``atomic_replace``,
+    ``sources/commit.py``: fsync'd temp + atomic rename),
     so a replayed offset range re-reads byte-identical records:
     exactly-once content with any idempotent sink — and composing with
     `txn_foreach_batch` (sources/txlog.py) gives the queue -> ACID
@@ -63,6 +64,8 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from aws_payment_data_lake_spark.sources.commit import atomic_replace
+
 SOURCE_NAME = "payments_queue"
 
 QUEUE_SCHEMA_DDL = (
@@ -105,8 +108,9 @@ def locked_json_update(path: str, update, timeout_s: float = 10.0,
 
     ``update(cur: dict) -> dict | None`` receives the current JSON
     (``{}`` if absent/corrupt) and returns the new content, or None to
-    skip the write (stale monotone commit). The write itself stays
-    tmp+rename, so READERS never need the lock — they see either the
+    skip the write (stale monotone commit). The write itself is
+    ``commit.atomic_replace`` (fsync'd temp + os.replace), so READERS
+    never need the lock — they see either the
     old or the new complete file. Locks older than ``stale_s`` are
     presumed crashed and stolen. At broker scale this whole file is an
     OffsetCommit RPC; the lock is the filesystem stand-in for the
@@ -171,15 +175,11 @@ def locked_json_update(path: str, update, timeout_s: float = 10.0,
                 cur = {}
             new = update(cur)
             if new is not None:
-                tmp = path + f".tmp-{uuid.uuid4().hex}"
-                with open(tmp, "w") as f:
-                    json.dump(new, f)
                 if _owns():
                     os.utime(lock)       # fresh stale_s for the swap
-                    os.replace(tmp, path)
+                    atomic_replace(path, json.dumps(new).encode())
                 else:                    # paused past stale_s: stolen
                     stolen = True
-                    os.unlink(tmp)
         finally:
             os.close(fd)
             if _owns():
@@ -246,11 +246,9 @@ def produce(queue_dir: str, topic: str, records: list[dict],
             lines.append(json.dumps({
                 "o": nxt + j, "t": ts,
                 "k": _b64(rec.get("key")), "v": _b64(rec["value"])}))
-        tmp = os.path.join(tp, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            f.write("\n".join(lines) + "\n")
-        final = os.path.join(tp, f"{nxt:020d}-{len(recs):08d}.jsonl")
-        os.rename(tmp, final)
+        atomic_replace(
+            os.path.join(tp, f"{nxt:020d}-{len(recs):08d}.jsonl"),
+            ("\n".join(lines) + "\n").encode())
         out[p] = (nxt, len(recs))
     return out
 
@@ -361,7 +359,7 @@ def compact_topic(queue_dir: str, topic: str) -> dict[str, int]:
     its surviving records, which is harmless (planning clips by span,
     readers filter by actual offsets; consumers must tolerate offset
     gaps, exactly as on a compacted Kafka topic). Rewrites publish by
-    tmp+rename, so a concurrent reader sees either version, both
+    ``atomic_replace``, so a concurrent reader sees either version, both
     self-consistent. Returns {"records_removed": n, "segments": m}.
 
     A compacted topic still replays to the same FINAL state through
@@ -399,10 +397,8 @@ def compact_topic(queue_dir: str, topic: str) -> dict[str, int]:
                 continue
             removed += len(rows) - len(keep)
             segs_rewritten += 1
-            tmp = os.path.join(tp, f".tmp-{uuid.uuid4().hex}")
-            with open(tmp, "w") as f:
-                f.write("".join(json.dumps(r) + "\n" for r in keep))
-            os.rename(tmp, path)          # same name: span preserved
+            atomic_replace(               # same name: span preserved
+                path, "".join(json.dumps(r) + "\n" for r in keep).encode())
     return {"records_removed": removed, "segments": segs_rewritten}
 
 

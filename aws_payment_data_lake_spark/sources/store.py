@@ -17,7 +17,9 @@ Crash + concurrency safety (round 7, VERDICT r6 #4 / ADVICE r6): every
 build lands in its own FINGERPRINT-SCOPED version directory
 (``<store>/<fingerprint>/<table>``), staged under a writer-private
 ``.build-*`` name and atomically renamed to the fingerprint name; the
-meta file is renamed into place LAST and points at one complete
+meta file is published LAST (``commit.atomic_replace``,
+``sources/commit.py``: fsync'd unique temp + os.replace, so concurrent
+commits never collide on a temp name) and points at one complete
 version. Consequences, each test-asserted (tests/test_durable_store.py):
   * a crash mid-build leaves only an orphan staging dir — no meta, no
     half-version; the next consumer rebuilds (repeated work, never a
@@ -54,6 +56,7 @@ from dataclasses import dataclass
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from aws_payment_data_lake_spark.sources.commit import atomic_replace
 from aws_payment_data_lake_spark.telemetry import timed_store_build
 
 _META_NAME = "_STORE_META.json"
@@ -292,11 +295,9 @@ def _commit_meta(store_dir: str, fingerprint: str,
             previous = json.load(fh).get("fingerprint")
     except (OSError, json.JSONDecodeError):
         previous = None
-    tmp = _meta_path(store_dir) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"fingerprint": fingerprint, "version": STORE_VERSION,
-                   "tables": tables, "extras": extras or {}}, fh)
-    os.replace(tmp, _meta_path(store_dir))
+    atomic_replace(_meta_path(store_dir), json.dumps(
+        {"fingerprint": fingerprint, "version": STORE_VERSION,
+         "tables": tables, "extras": extras or {}}).encode())
     _gc_old_versions(store_dir, fingerprint, previous)
 
 

@@ -26,8 +26,11 @@ Commit protocol (the ACID core):
      only ever open files the log references, so a crashed write
      leaves garbage, never a torn table (same posture as the audit
      sink's manifest, ``sources/audit_sink.py``).
-  2. Publish: the full commit JSON is written to a temp name, fsynced,
-     then ``os.link``ed to ``_txlog/<version>.json``. Hard-link
+  2. Publish: ``commit.put_if_absent`` (``sources/commit.py``, the
+     one durable-publish primitive) writes the full commit JSON to a
+     temp name, fsyncs it, then ``os.link``s it to
+     ``_txlog/<version>.json``; a won publish then checkpoints when
+     the version is due, so every commit path pairs the two. Hard-link
      creation is atomic and fails with EEXIST if the version is taken,
      so it is simultaneously the content-atomicity barrier (no reader
      can observe a half-written commit — the name appears with its
@@ -83,7 +86,7 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
 from urllib.parse import unquote, urlparse
 
@@ -91,6 +94,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from aws_payment_data_lake_spark.localframe import local_frame
+from aws_payment_data_lake_spark.sources.commit import (
+    atomic_replace,
+    put_if_absent,
+)
 from pyspark.sql.types import StructField, StructType
 
 _LOG_DIR = "_txlog"
@@ -667,8 +674,10 @@ class TxnTable:
     # ----------------------------------------------------- log writes
     def _try_publish(self, version: int, commit: dict[str, Any],
                      features: tuple[str, ...] = ()) -> bool:
-        """Atomically claim ``version`` with the full commit content.
-        True on success, False if another writer took the version.
+        """Atomically claim ``version`` with the full commit content
+        (``commit.put_if_absent``). True on success — after writing
+        the checkpoint if ``version`` is due, so no commit path can
+        skip it — False if another writer took the version.
 
         Protocol gate (single choke point — every commit path ends
         here): features the commit's content activates (plus explicit
@@ -694,18 +703,12 @@ class TxnTable:
             commit.pop("protocol", None)   # stale from a lost race
         _validate_writer_protocol(up or base, self.path)
         os.makedirs(self._log, exist_ok=True)
-        tmp = os.path.join(self._log, f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump(commit, f, separators=(",", ":"))
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, self._commit_path(version))
-            return True
-        except FileExistsError:
-            return False
-        finally:
-            os.unlink(tmp)
+        won = put_if_absent(
+            self._commit_path(version),
+            json.dumps(commit, separators=(",", ":")).encode())
+        if won:
+            self._maybe_checkpoint(version)
+        return won
 
     def _maybe_checkpoint(self, version: int) -> None:
         if version <= 0 or version % self.checkpoint_every:
@@ -744,26 +747,19 @@ class TxnTable:
         # single parquet is a multi-GB driver allocation; parts bound
         # it. Every part carries the full meta blob (readers take it
         # from part 0; identical blobs keep parts self-describing).
-        # Parts land by tmp+replace BEFORE _last_checkpoint repoints,
+        # Parts land by atomic_replace BEFORE _last_checkpoint repoints,
         # so a crash mid-write leaves the old checkpoint authoritative
         # and the new parts as harmless versioned orphans.
         per = max(1, int(self.checkpoint_part_rows))
         n_parts = max(1, -(-t.num_rows // per)) if t.num_rows else 1
-        if n_parts == 1:
-            ck = self._ckpt_path(snap.version)
-            pq.write_table(t, ck + ".tmp")
-            os.replace(ck + ".tmp", ck)
-        else:
-            for i in range(n_parts):
-                part = t.slice(i * per, per)
-                ck = self._ckpt_part_path(snap.version, i)
-                pq.write_table(part, ck + ".tmp")
-                os.replace(ck + ".tmp", ck)
-        ptr = os.path.join(self._log, _LAST_CKPT)
-        with open(ptr + f".tmp-{uuid.uuid4().hex}", "w") as f:
-            json.dump({"version": snap.version, "parts": n_parts}, f)
-            tmpname = f.name
-        os.replace(tmpname, ptr)
+        for i in range(n_parts):
+            buf = pa.BufferOutputStream()
+            pq.write_table(t.slice(i * per, per), buf)
+            atomic_replace(self._ckpt_path(snap.version) if n_parts == 1
+                           else self._ckpt_part_path(snap.version, i),
+                           memoryview(buf.getvalue()))
+        atomic_replace(os.path.join(self._log, _LAST_CKPT), json.dumps(
+            {"version": snap.version, "parts": n_parts}).encode())
 
     # ---------------------------------------------------- data writes
     def _stage(self, df: DataFrame, partition_by: list[str] | None,
@@ -982,33 +978,37 @@ class TxnTable:
         rather than mutates) and ``txlog.checkpointInterval``."""
         props = {k: str(v) for k, v in props.items()}
         self._validate_props(props)
-        while True:
-            snap = self._replay()
-            merged = {**snap.properties, **props}
-            commit = {"op": "set_properties", "ts": time.time(),
-                      "add": [], "remove": [], "properties": merged}
-            feats = (("append_only",)
-                     if merged.get("txlog.appendOnly", ""
-                                   ).lower() == "true" else ())
-            v = snap.version + 1
-            if self._try_publish(v, commit, features=feats):
-                self._maybe_checkpoint(v)
-                return v
+        # append_only activates from the property map itself
+        # (_commit_features), so no explicit feature tag is needed
+        return self._meta_commit("set_properties", lambda snap: {
+            "properties": {**snap.properties, **props}})
 
     def unset_properties(self, keys: list[str]) -> int:
         """ALTER TABLE UNSET TBLPROPERTIES (unknown keys are a no-op,
         matching Spark's IF EXISTS-less behavior on Delta)."""
+        return self._meta_commit("set_properties", lambda snap: {
+            "properties": {k: x for k, x in snap.properties.items()
+                           if k not in set(keys)}})
+
+    def _meta_commit(self, op: str,
+                     build: Callable[[Snapshot], dict[str, Any] | None],
+                     features: tuple[str, ...] = ()) -> int:
+        """The one CAS loop of the metadata-only commands (no file is
+        added or removed): replay the head, ``build`` the commit's
+        fields from it — raising aborts with nothing published, None
+        is a no-op returning the head version — publish at head + 1,
+        and on a lost race rebuild against the winner's head (a
+        concurrent commit may itself have evolved the schema or data
+        a validation must see). Returns the committed version."""
         while True:
             snap = self._replay()
-            remaining = {k: x for k, x in snap.properties.items()
-                         if k not in set(keys)}
-            commit = {"op": "set_properties", "ts": time.time(),
-                      "add": [], "remove": [],
-                      "properties": remaining}
-            v = snap.version + 1
-            if self._try_publish(v, commit):
-                self._maybe_checkpoint(v)
-                return v
+            fields = build(snap)
+            if fields is None:
+                return snap.version
+            commit = {"op": op, "ts": time.time(), "add": [],
+                      "remove": [], **fields}
+            if self._try_publish(snap.version + 1, commit, features):
+                return snap.version + 1
 
     def _maybe_autocompact(self) -> None:
         """Post-append policy hook (Databricks' autoCompact): when
@@ -1083,8 +1083,7 @@ class TxnTable:
         set_constraints commit carrying the full updated map. Losing a
         version race re-validates against the new head — data appended
         concurrently is never grandfathered past the check."""
-        while True:
-            snap = self._replay()
+        def build(snap: Snapshot) -> dict[str, Any]:
             if name in snap.constraints:
                 raise ValueError(
                     f"constraint {name!r} already on {self.path}: "
@@ -1093,13 +1092,8 @@ class TxnTable:
                 self._enforce(
                     self._read_files(snap, sorted(snap.live)),
                     {name: expr})
-            commit = {"op": "set_constraints", "ts": time.time(),
-                      "add": [], "remove": [],
-                      "constraints": {**snap.constraints, name: expr}}
-            v = snap.version + 1
-            if self._try_publish(v, commit):
-                self._maybe_checkpoint(v)
-                return v
+            return {"constraints": {**snap.constraints, name: expr}}
+        return self._meta_commit("set_constraints", build)
 
     def add_columns(self, columns: dict[str, str]) -> int:
         """ALTER TABLE ADD COLUMNS: a metadata-only commit extending
@@ -1112,8 +1106,9 @@ class TxnTable:
         gets a FRESH physical id via the column mapping — otherwise
         old files would leak the retired column's data into the new
         logical column."""
-        while True:
-            snap = self._replay()
+        from pyspark.sql.types import _parse_datatype_string
+
+        def build(snap: Snapshot) -> dict[str, Any]:
             cur = snap.schema
             if cur is None:
                 raise ValueError(f"{self.path} has no schema to extend")
@@ -1122,8 +1117,6 @@ class TxnTable:
             if clash:
                 raise ValueError(
                     f"column(s) {clash} already exist on {self.path}")
-            from pyspark.sql.types import _parse_datatype_string
-
             taken_physical = ({snap.phys(f.name) for f in cur.fields}
                               | set(snap.dropped_physical))
             mapping = dict(snap.column_mapping)
@@ -1136,17 +1129,11 @@ class TxnTable:
                 list(cur.fields)
                 + [StructField(n, _parse_datatype_string(t), True)
                    for n, t in columns.items()])
-            commit = {"op": "set_schema", "ts": time.time(),
-                      "schema_json": merged.json(),
-                      "add": [], "remove": []}
+            fields: dict[str, Any] = {"schema_json": merged.json()}
             if remap:
-                commit["column_mapping"] = mapping
-            v = snap.version + 1
-            if self._try_publish(v, commit):
-                self._maybe_checkpoint(v)
-                return v
-            # lost the race: re-replay (the winner may itself have
-            # evolved the schema) and retry against the new head
+                fields["column_mapping"] = mapping
+            return fields
+        return self._meta_commit("set_schema", build)
 
     def widen_column(self, col: str, new_type: str) -> int:
         """ALTER TABLE ALTER COLUMN col TYPE t — Delta's explicit
@@ -1158,8 +1145,8 @@ class TxnTable:
         from pyspark.sql.types import _parse_datatype_string
 
         want = _parse_datatype_string(new_type)
-        while True:
-            snap = self._replay()
+
+        def build(snap: Snapshot) -> dict[str, Any] | None:
             cur = snap.schema
             if cur is None or col not in {f.name for f in cur.fields}:
                 raise KeyError(f"no column {col!r} on {self.path}")
@@ -1167,26 +1154,21 @@ class TxnTable:
             old_s, new_s = (old.dataType.simpleString(),
                             want.simpleString())
             if old_s == new_s:
-                return snap.version          # no-op
+                return None                  # no-op
             if new_s not in self._WIDENS_TO.get(old_s, ()):
                 raise ValueError(
                     f"ALTER COLUMN {col} TYPE {new_s} on {self.path}: "
                     f"{old_s} -> {new_s} is not a safe widening "
                     f"({self._WIDENS_TO.get(old_s) or 'none allowed'})")
-            merged = StructType([
+            return {"schema_json": StructType([
                 StructField(f.name, want if f.name == col else
                             f.dataType, f.nullable)
-                for f in cur.fields])
-            commit = {"op": "set_schema", "ts": time.time(),
-                      "schema_json": merged.json(),
-                      "add": [], "remove": []}
-            v = snap.version + 1
-            # type_widening is invisible in the commit content (a
-            # set_schema like any other) but changes how READERS must
-            # treat old files — tag it explicitly
-            if self._try_publish(v, commit, features=("type_widening",)):
-                self._maybe_checkpoint(v)
-                return v
+                for f in cur.fields]).json()}
+        # type_widening is invisible in the commit content (a
+        # set_schema like any other) but changes how READERS must
+        # treat old files — tag it explicitly
+        return self._meta_commit("set_schema", build,
+                                 features=("type_widening",))
 
     def _assert_not_referenced(self, snap: Snapshot, col: str,
                                verb: str) -> None:
@@ -1213,8 +1195,7 @@ class TxnTable:
         pre-rename versions still reads under the OLD name (each
         snapshot carries its own mapping). The clustering spec follows
         the rename; CHECK constraints referencing the column block it."""
-        while True:
-            snap = self._replay()
+        def build(snap: Snapshot) -> dict[str, Any]:
             cur = snap.schema
             if cur is None:
                 raise FileNotFoundError(f"no txlog table at {self.path}")
@@ -1234,12 +1215,10 @@ class TxnTable:
                 StructField(new if f.name == old else f.name,
                             f.dataType, f.nullable)
                 for f in cur.fields])
-            commit = {"op": "rename_column", "ts": time.time(),
-                      "schema_json": renamed.json(),
+            commit = {"schema_json": renamed.json(),
                       "column_mapping": mapping,
                       "partition_by": [new if c == old else c
-                                       for c in snap.partition_by],
-                      "add": [], "remove": []}
+                                       for c in snap.partition_by]}
             if snap.defaults:            # the default follows the name
                 commit["defaults"] = {(new if k == old else k): x
                                       for k, x in snap.defaults.items()}
@@ -1250,10 +1229,8 @@ class TxnTable:
                 # PHYSICAL name, which the rename never changes.
                 commit["identity"] = {(new if k == old else k): v
                                       for k, v in snap.identity.items()}
-            v = snap.version + 1
-            if self._try_publish(v, commit):
-                self._maybe_checkpoint(v)
-                return v
+            return commit
+        return self._meta_commit("rename_column", build)
 
     def drop_column(self, name: str) -> int:
         """ALTER TABLE DROP COLUMN — metadata-only: the field leaves
@@ -1263,8 +1240,7 @@ class TxnTable:
         of the same name maps to a fresh physical id instead of
         resurrecting the dropped data. Clustering or CHECK-referenced
         columns block the drop; so does dropping the last column."""
-        while True:
-            snap = self._replay()
+        def build(snap: Snapshot) -> dict[str, Any]:
             cur = snap.schema
             if cur is None:
                 raise FileNotFoundError(f"no txlog table at {self.path}")
@@ -1282,14 +1258,12 @@ class TxnTable:
             self._assert_not_referenced(snap, name, "drop")
             mapping = dict(snap.column_mapping)
             phys = mapping.pop(name, name)
-            commit = {"op": "drop_column", "ts": time.time(),
-                      "schema_json": StructType(
+            commit = {"schema_json": StructType(
                           [f for f in cur.fields
                            if f.name != name]).json(),
                       "column_mapping": mapping,
                       "dropped_physical": sorted(
-                          set(snap.dropped_physical) | {phys}),
-                      "add": [], "remove": []}
+                          set(snap.dropped_physical) | {phys})}
             if snap.defaults:            # the default dies with the col
                 commit["defaults"] = {k: x for k, x
                                       in snap.defaults.items()
@@ -1301,27 +1275,20 @@ class TxnTable:
                 commit["identity"] = {k: v for k, v
                                       in snap.identity.items()
                                       if k != name}
-            v = snap.version + 1
-            if self._try_publish(v, commit):
-                self._maybe_checkpoint(v)
-                return v
+            return commit
+        return self._meta_commit("drop_column", build)
 
     def drop_check_constraint(self, name: str) -> int:
         """ALTER TABLE DROP CONSTRAINT."""
-        while True:
-            snap = self._replay()
+        def build(snap: Snapshot) -> dict[str, Any]:
             if name not in snap.constraints:
                 raise KeyError(
                     f"no constraint {name!r} on {self.path} "
                     f"(have {sorted(snap.constraints)})")
-            kept = {n: e for n, e in snap.constraints.items()
-                    if n != name}
-            commit = {"op": "set_constraints", "ts": time.time(),
-                      "add": [], "remove": [], "constraints": kept}
-            v = snap.version + 1
-            if self._try_publish(v, commit):
-                self._maybe_checkpoint(v)
-                return v
+            return {"constraints": {n: e for n, e
+                                    in snap.constraints.items()
+                                    if n != name}}
+        return self._meta_commit("set_constraints", build)
 
     @staticmethod
     def _derive_generated(df: DataFrame,
@@ -1481,34 +1448,21 @@ class TxnTable:
         (constant) expression instead of being rejected by the strict
         schema check. Existing rows are untouched (the ANSI/Delta
         contract — a default is a write-time fill, not a backfill)."""
-        while True:
-            snap = self._replay()
+        def build(snap: Snapshot) -> dict[str, Any]:
             self._validate_default(col, expr, snap)
-            commit = {"op": "set_defaults", "ts": time.time(),
-                      "add": [], "remove": [],
-                      "defaults": {**snap.defaults, col: expr}}
-            v = snap.version + 1
-            if self._try_publish(v, commit):
-                self._maybe_checkpoint(v)
-                return v
+            return {"defaults": {**snap.defaults, col: expr}}
+        return self._meta_commit("set_defaults", build)
 
     def drop_column_default(self, col: str) -> int:
         """ALTER TABLE ... ALTER COLUMN col DROP DEFAULT: writes
         omitting the column are rejected again (strict schema)."""
-        while True:
-            snap = self._replay()
+        def build(snap: Snapshot) -> dict[str, Any]:
             if col not in snap.defaults:
                 raise KeyError(f"no DEFAULT on column {col!r} of "
                                f"{self.path}")
-            commit = {"op": "set_defaults", "ts": time.time(),
-                      "add": [], "remove": [],
-                      "defaults": {k: x for k, x
-                                   in snap.defaults.items()
-                                   if k != col}}
-            v = snap.version + 1
-            if self._try_publish(v, commit):
-                self._maybe_checkpoint(v)
-                return v
+            return {"defaults": {k: x for k, x in snap.defaults.items()
+                                 if k != col}}
+        return self._meta_commit("set_defaults", build)
 
     @staticmethod
     def _auto_constraints(generated: dict[str, str],
@@ -2030,7 +1984,6 @@ class TxnTable:
         while True:
             v = snap.version + 1
             if self._try_publish(v, commit):
-                self._maybe_checkpoint(v)
                 self._maybe_autocompact()
                 return v
             snap = self._replay()      # lost the race: appends commute
@@ -2215,7 +2168,6 @@ class TxnTable:
         while True:
             v = snap.version + 1
             if self._try_publish(v, commit, features=("copy_into",)):
-                self._maybe_checkpoint(v)
                 self._maybe_autocompact()
                 return {"version": v, "files_loaded": len(new),
                         "files_skipped": len(found) - len(new),
@@ -2311,7 +2263,6 @@ class TxnTable:
                     adds, snap, ow_bases)
             v = snap.version + 1
             if self._try_publish(v, commit):
-                self._maybe_checkpoint(v)
                 return v
 
     def replace(self, df: DataFrame,
@@ -2380,7 +2331,6 @@ class TxnTable:
                 "remove": sorted(snap.live)}
             v = snap.version + 1
             if self._try_publish(v, commit):
-                self._maybe_checkpoint(v)
                 return v
 
     # -------------------------------------------------------- queries
@@ -2648,7 +2598,6 @@ class TxnTable:
             raise ConcurrentWriteError(
                 f"restore of {self.path} read version {cur.version} but "
                 "another commit won the next version; re-run")
-        self._maybe_checkpoint(v)
         return v
 
     def count_rows(self, version: int | None = None,
@@ -3036,7 +2985,6 @@ class TxnTable:
         read_v = snap.version
         for _ in range(8):
             if self._try_publish(read_v + 1, commit):
-                self._maybe_checkpoint(read_v + 1)
                 break
             head_v = self.latest_version()
             self._assert_merge_commutes(read_v, head_v, touched,
@@ -3236,7 +3184,6 @@ class TxnTable:
             read_v = snap.version
             for _ in range(8):
                 if self._try_publish(read_v + 1, commit):
-                    self._maybe_checkpoint(read_v + 1)
                     break
                 head_v = self.latest_version()
                 self._assert_merge_commutes(read_v, head_v, set(),
@@ -3395,11 +3342,9 @@ class TxnTable:
                     f"merge (NOT MATCHED BY SOURCE) into {self.path} "
                     f"read version {read_v} but another commit won; "
                     "this clause reads the whole table, so re-run")
-            self._maybe_checkpoint(read_v + 1)
         else:
             for _ in range(8):
                 if self._try_publish(read_v + 1, commit):
-                    self._maybe_checkpoint(read_v + 1)
                     break
                 head_v = self.latest_version()
                 self._assert_merge_commutes(read_v, head_v, touched,
@@ -3579,7 +3524,6 @@ class TxnTable:
                 f"{op} on {self.path} read version {snap.version} but "
                 "another commit won the next version; re-run (staged "
                 "files are orphaned until vacuum)")
-        self._maybe_checkpoint(snap.version + 1)
         return {"version": snap.version + 1,
                 "files_rewritten": len(touched),
                 "rows_changed": rows_changed}
@@ -3654,7 +3598,6 @@ class TxnTable:
                 f"replaceWhere on {self.path} read version "
                 f"{snap.version} but another commit won; re-run "
                 "(staged files are orphaned until vacuum)")
-        self._maybe_checkpoint(snap.version + 1)
         replaced = sum(snap.live[p].rows for p in touched)
         return {"version": snap.version + 1,
                 "files_rewritten": len(touched),
@@ -3726,7 +3669,6 @@ class TxnTable:
                 f"dv-delete on {self.path} read version {snap.version} "
                 "but another commit won the next version; re-run "
                 "(staged sidecars are orphaned until vacuum)")
-        self._maybe_checkpoint(snap.version + 1)
         return {"version": snap.version + 1, "files_rewritten": 0,
                 "rows_changed": int(sum(per_target.values())),
                 "dv_files": len(dv_files)}
@@ -3828,7 +3770,6 @@ class TxnTable:
                 f"dv-update on {self.path} read version {snap.version} "
                 "but another commit won the next version; re-run "
                 "(staged files are orphaned until vacuum)")
-        self._maybe_checkpoint(snap.version + 1)
         return {"version": snap.version + 1, "files_rewritten": 0,
                 "rows_changed": int(sum(per_target.values())),
                 "dv_files": len(dv_files),
@@ -3875,27 +3816,9 @@ class TxnTable:
                       "zorder_by": zorder_by,
                       "add": [a.to_json() for a in adds],
                       "remove": inputs}
-            if self._try_publish(snap.version + 1, commit):
-                self._maybe_checkpoint(snap.version + 1)
-                return {"version": snap.version + 1,
-                        "files_in": len(inputs),
-                        "files_out": len(adds), "noop": 0}
-            head = self._replay()
-            if not all(p in head.live for p in inputs):
-                raise ConcurrentWriteError(
-                    f"optimize of {self.path}: an input file was "
-                    "removed by a concurrent commit")
-            if self._dv_state_changed(snap, head, inputs):
-                continue   # a concurrent delete_dv/update_dv/restore
-                # changed rows our staged rewrite already materialized
-                # WITHOUT — republishing it would resurrect DV-deleted
-                # rows (lost update). Re-read under the new head; the
-                # staged files are orphaned until vacuum.
-            commit["read_version"] = head.version
-            if self._try_publish(head.version + 1, commit):
-                self._maybe_checkpoint(head.version + 1)
-                return {"version": head.version + 1,
-                        "files_in": len(inputs),
+            v = self._publish_rewrite(snap, commit)
+            if v is not None:
+                return {"version": v, "files_in": len(inputs),
                         "files_out": len(adds), "noop": 0}
 
     def compact(self, max_files: int = 1,
@@ -3930,30 +3853,10 @@ class TxnTable:
                       "read_version": snap.version,
                       "add": [a.to_json() for a in adds],
                       "remove": inputs}
-            if self._try_publish(snap.version + 1, commit):
-                self._maybe_checkpoint(snap.version + 1)
-                return {"version": snap.version + 1,
-                        "files_in": len(inputs),
+            v = self._publish_rewrite(snap, commit)
+            if v is not None:
+                return {"version": v, "files_in": len(inputs),
                         "files_out": len(adds), "noop": 0}
-            head = self._replay()
-            if not all(p in head.live for p in inputs):
-                raise ConcurrentWriteError(
-                    f"compact of {self.path}: an input file was removed "
-                    "by a concurrent commit")
-            if self._dv_state_changed(snap, head, inputs):
-                continue   # concurrent DV op on an input: the staged
-                # rewrite predates the sidecar and would resurrect its
-                # dead rows — loop and re-read through the new DV state
-            # concurrent append: our rewrite is still valid, retry
-            # (the staged output is reused only if inputs unchanged;
-            # otherwise re-read — here inputs are unchanged by check)
-            commit["read_version"] = head.version
-            if self._try_publish(head.version + 1, commit):
-                self._maybe_checkpoint(head.version + 1)
-                return {"version": head.version + 1,
-                        "files_in": len(inputs),
-                        "files_out": len(adds), "noop": 0}
-            # lost twice: loop from scratch (orphans vacuumed later)
 
     def materialize_dvs(self, min_dead_frac: float = 0.0,
                         max_files: int | None = None) -> dict[str, int]:
@@ -4003,26 +3906,40 @@ class TxnTable:
                       "read_version": snap.version,
                       "add": [a.to_json() for a in adds],
                       "remove": inputs}
-            if self._try_publish(snap.version + 1, commit):
-                self._maybe_checkpoint(snap.version + 1)
-                return {"version": snap.version + 1,
-                        "files_purged": len(inputs),
+            v = self._publish_rewrite(snap, commit)
+            if v is not None:
+                return {"version": v, "files_purged": len(inputs),
                         "files_out": len(adds),
                         "rows_dropped": int(dropped), "noop": 0}
-            head = self._replay()
-            if not all(p in head.live for p in inputs):
-                raise ConcurrentWriteError(
-                    f"reorg of {self.path}: an input file was removed "
-                    "by a concurrent commit")
-            if self._dv_state_changed(snap, head, inputs):
-                continue    # new dead rows on an input: re-read
-            commit["read_version"] = head.version
-            if self._try_publish(head.version + 1, commit):
-                self._maybe_checkpoint(head.version + 1)
-                return {"version": head.version + 1,
-                        "files_purged": len(inputs),
-                        "files_out": len(adds),
-                        "rows_dropped": int(dropped), "noop": 0}
+
+    def _publish_rewrite(self, snap: Snapshot,
+                         commit: dict[str, Any]) -> int | None:
+        """Publish a layout rewrite (compact, optimize, reorg) of the
+        files in ``commit["remove"]``, staged from ``snap``. Returns
+        the committed version, or None when the caller must re-read
+        and restage (staged files are orphaned until vacuum).
+
+        A lost race re-reads the head. A removed input aborts with
+        ConcurrentWriteError. A changed deletion-vector state on an
+        input returns None: the staged rewrite was materialized
+        through the OLD DV state and republishing it would resurrect
+        the newly-dead rows (lost update). Otherwise the winner was a
+        commuting append, so the same rewrite is republished once at
+        the new head; losing that too also returns None."""
+        if self._try_publish(snap.version + 1, commit):
+            return snap.version + 1
+        head = self._replay()
+        inputs = commit["remove"]
+        if not all(p in head.live for p in inputs):
+            raise ConcurrentWriteError(
+                f"{commit['op']} of {self.path}: an input file was "
+                "removed by a concurrent commit")
+        if self._dv_state_changed(snap, head, inputs):
+            return None
+        commit["read_version"] = head.version
+        if self._try_publish(head.version + 1, commit):
+            return head.version + 1
+        return None
 
     def _scoped(self, snap: Snapshot, live: dict[str, AddFile],
                 scope: tuple[str, Any, Any] | None

@@ -345,8 +345,9 @@ class _SnapshotWriter(DataSourceArrowWriter):
     Tasks stage ordinary parquet under ``data/<uuid>/`` (invisible
     until referenced — the format's property 3) and report footer
     stats in their commit messages; ``commit()`` publishes ONE log
-    commit through the same fsync+hardlink put-if-absent claim as
-    every other writer, retrying appends on lost races (appends
+    commit through ``TxnTable._try_publish`` — the
+    ``commit.put_if_absent`` claim (``sources/commit.py``) every
+    other writer uses — retrying appends on lost races (appends
     commute) and recomputing removes for overwrite (last-writer-
     wins). A failed job aborts by deleting the staged dirs — nothing
     was ever visible. Writing to an ABSENT path creates version 0
@@ -532,7 +533,6 @@ class _SnapshotWriter(DataSourceArrowWriter):
             if not t._try_publish(0, commit):
                 raise ConcurrentWriteError(
                     f"concurrent create at {self.path}")
-            t._maybe_checkpoint(0)
             return
         while True:
             snap = t._replay()
@@ -579,11 +579,9 @@ class _SnapshotWriter(DataSourceArrowWriter):
                 commit["column_mapping"] = {}
                 commit["dropped_physical"] = []
                 commit["partition_by"] = self.partition_by or []
+            # a won publish checkpoints inside _try_publish, so a
+            # plain-Spark-only pipeline's replay cost stays bounded
             if t._try_publish(snap.version + 1, commit):
-                # same pairing as every package commit path: a
-                # plain-Spark-only pipeline must still checkpoint, or
-                # its replay cost grows with every commit forever
-                t._maybe_checkpoint(snap.version + 1)
                 return                      # appends commute; LWW
                                             # overwrite recomputes
 

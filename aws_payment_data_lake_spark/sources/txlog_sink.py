@@ -22,7 +22,8 @@ Execution split (Python Data Source API, SPARK-44076):
     like on batch-written ones.
   * ``commit(messages, batchId)`` runs in the driver-side Python
     runner, which has NO SparkSession — deliberately fine: the commit
-    protocol (`_replay`, `_try_publish`, checkpointing) is pure
+    protocol (`_replay`, and `_try_publish`, which checkpoints a won
+    version and writes through ``sources/commit.py``) is pure
     file-IO + pyarrow. Losing a version race re-replays and
     republishes (appends commute), re-checking the high-water mark so
     a concurrent replica of the same query still commits each batch
@@ -279,7 +280,6 @@ class _TxlogStreamWriter(DataSourceStreamWriter):
         while True:
             v = snap.version + 1
             if t._try_publish(v, commit):
-                t._maybe_checkpoint(v)
                 return
             snap = t._replay()           # lost the race: appends commute
             if snap.txns.get(self.app, -1) >= batchId:

@@ -48,7 +48,7 @@ from aws_payment_data_lake_spark.oracle import (  # noqa: E402
     diff_results,
     pandas_rows,
 )
-from aws_payment_data_lake_spark.session import get_spark  # noqa: E402
+from aws_payment_data_lake_spark.session import cpu_count  # noqa: E402
 from aws_payment_data_lake_spark.sources import TESTDATA_TABLES  # noqa: E402
 
 DRIVER_QUERY_CAP = 50
@@ -61,7 +61,14 @@ def main() -> int:
     ap.add_argument("--skip-smoke", action="store_true")
     args = ap.parse_args()
 
-    spark = get_spark(app_name="driver-sim")
+    # entry() and the queries are handed a BARE session — local
+    # master, UTC, no other conf — so they must not rely on
+    # get_spark()'s settings
+    from pyspark.sql import SparkSession
+    spark = (SparkSession.builder.appName("driver-sim")
+             .master(f"local[{cpu_count()}]")
+             .config("spark.sql.session.timeZone", "UTC")
+             .getOrCreate())
 
     # ---- t1 smoke ----
     if not args.skip_smoke:

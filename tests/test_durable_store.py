@@ -341,3 +341,47 @@ def test_torn_table_dir_recovers_not_wedges(spark, tmp_path):
         lambda: (_ for _ in ()).throw(AssertionError("must not rebuild")))
     assert frames3["extra"].count() == 5
     _sh.rmtree(store)
+
+
+def test_concurrent_meta_commits_never_collide(tmp_path):
+    """Four threads committing the meta pointer of ONE store dir
+    300 times each: every commit lands without an exception and the
+    final meta parses. A shared fixed temp name loses here — one
+    writer's os.replace moves the temp another writer is about to
+    publish, and the loser raises FileNotFoundError."""
+    import threading
+
+    from aws_payment_data_lake_spark.sources.store import (
+        STORE_VERSION,
+        _commit_meta,
+    )
+
+    store = str(tmp_path / "store")
+    os.makedirs(store)
+    errors: list[BaseException] = []
+
+    def writer(i: int) -> None:
+        try:
+            for n in range(300):
+                _commit_meta(store, f"v2-{n}-{i:016x}", ["t"],
+                             {"writer": i})
+        except BaseException as e:  # noqa: BLE001
+            errors.append(e)
+
+    threads = [threading.Thread(target=writer, args=(i,))
+               for i in range(4)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, f"{len(errors)} commits raised: {errors[0]!r}"
+    with open(os.path.join(store, "_STORE_META.json")) as fh:
+        meta = json.load(fh)
+    assert meta["version"] == STORE_VERSION and meta["tables"] == ["t"]
+    assert not [n for n in os.listdir(store) if n.startswith(".tmp")]

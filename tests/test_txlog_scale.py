@@ -30,9 +30,7 @@ def _fabricate(path: str, n_commits: int, files_per_commit: int,
         if v == 0:
             commit["schema_json"] = schema_json
             commit["partition_by"] = []
-        assert t._try_publish(v, commit)
-        if v and v % checkpoint_every == 0:
-            t._maybe_checkpoint(v)
+        assert t._try_publish(v, commit)   # checkpoints when due
     return t
 
 
