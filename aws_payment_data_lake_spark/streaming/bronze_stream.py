@@ -85,19 +85,21 @@ def start_bronze_upsert_sink(bronze: DataFrame, bronze_dir: str,
     content unchanged, so EITHER kind of rerun (checkpoint recovery or a
     full re-ingest with a fresh checkpoint) never duplicates rows.
 
-    The micro-batch is localCheckpoint()ed first: the MERGE reads and
-    dynamically overwrites the target partitions, and a lazy batch plan
-    still referencing the zone would dangle mid-overwrite
-    (plans/upsert.py docstring). A micro-batch is bounded (maxFiles /
-    trigger interval sized), so materializing it is cheap at any scale.
+    The micro-batch is localCheckpoint()ed first, eagerly, and the
+    emptiness check runs on that pin, so the source is read once: the
+    MERGE reads and dynamically overwrites the target partitions, and a
+    lazy batch plan still referencing the zone would dangle
+    mid-overwrite (plans/upsert.py docstring). A micro-batch is bounded
+    (maxFiles / trigger interval sized), so materializing it is cheap
+    at any scale.
     """
     from pyspark.errors import AnalysisException
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        batch = batch_df.localCheckpoint(eager=True)  # one source read
+        if batch.isEmpty():
             return
         spark = batch_df.sparkSession
-        batch = batch_df.localCheckpoint()
         try:
             spark.read.parquet(bronze_dir).schema
             exists = True

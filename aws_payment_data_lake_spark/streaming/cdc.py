@@ -12,6 +12,13 @@ key hash), so per-key event ORDER is the partition's offset order —
 the same ordering guarantee a real Kafka CDC topic gives.
 
 Per micro-batch:
+  0. pin the batch once: an eager localCheckpoint of the reduced
+     frame (steps 1-2) is the batch's only source read, and the
+     emptiness guard runs on the pin. An early-stopping action
+     (isEmpty) on a Python data source abandons its worker
+     mid-stream, so the daemon discards it and the next read forks a
+     fresh one — a guard on the raw batch would pay the source twice
+     plus a worker start-up;
   1. deserialize value -> columns + _op (built-ins, JVM-side);
   2. keep the LAST event per key by (offset) — one window over the
      batch, so a key upserted then deleted inside one batch nets to
@@ -73,8 +80,6 @@ def cdc_foreach_batch(table: TxnTable, key_cols: list[str],
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         nonlocal table_cols
-        if batch_df.isEmpty():
-            return          # don't publish an empty merge per trigger
         parsed = parse_json_values(batch_df, full_ddl)
         last = last_event_per_key(parsed, key_cols)
         vcols = [c for c in last.columns
@@ -88,7 +93,10 @@ def cdc_foreach_batch(table: TxnTable, key_cols: list[str],
             schema = table._replay().schema
             table_cols = [f.name for f in schema.fields] if schema \
                 else vcols
-        src = last.select(*table_cols, OP_COL)
+        # the batch's one source read; the guard below is JVM-only
+        src = last.select(*table_cols, OP_COL).localCheckpoint(eager=True)
+        if src.isEmpty():
+            return          # don't publish an empty merge per trigger
         # one merge applies the whole batch: _op='d' rows delete,
         # everything else upserts (the extra _op column never lands —
         # merge projects the table schema before staging). merge is

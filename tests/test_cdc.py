@@ -8,6 +8,7 @@ import json
 import pytest
 
 from aws_payment_data_lake_spark.sources.queue_source import (
+    QUEUE_SCHEMA_DDL,
     produce,
     stream_queue,
 )
@@ -164,6 +165,71 @@ def test_cdc_retries_past_concurrent_writer(spark, tmp_path):
         t._try_publish = orig
     assert fired["n"] == 1
     assert _state(t) == [(1, 1.0), (2, 2.0), (50, 50.0)]
+
+
+def test_cdc_apply_reads_batch_once(spark, tmp_path):
+    """The apply reads its micro-batch through the source exactly once:
+    the emptiness guard runs on the pinned frame, not on the raw batch
+    (an early-stopping isEmpty on a Python source discards its worker,
+    and merge would then read the batch a second time)."""
+    import datetime
+
+    from pyspark.sql.datasource import DataSource, DataSourceReader
+
+    events = [(1, 11.0, "u"), (2, 0.0, "d"), (3, 3.0, "u"), (1, 1.5, "u")]
+
+    # defined here so cloudpickle ships both classes to the workers by
+    # value; every read() call leaves one line in the `log` file
+    class _CountingReader(DataSourceReader):
+        def __init__(self, options):
+            self.log = options["log"]
+
+        def read(self, partition):
+            with open(self.log, "a") as f:
+                f.write("read\n")
+            ts = datetime.datetime(2024, 1, 1)
+            for o, (i, v, op) in enumerate(events):
+                yield (str(i).encode(),
+                       json.dumps({"id": i, "v": v, "_op": op}).encode(),
+                       "cdc", 0, o, ts, 1)
+
+    class _CountingQueue(DataSource):
+        @classmethod
+        def name(cls):
+            return "counting_queue"
+
+        def schema(self):
+            return QUEUE_SCHEMA_DDL
+
+        def reader(self, schema):
+            return _CountingReader(self.options)
+
+    log = tmp_path / "reads.log"
+    spark.dataSource.register(_CountingQueue)
+    batch = (spark.read.format("counting_queue")
+             .option("log", str(log)).load())
+    t = TxnTable(spark, str(tmp_path / "t"))
+    t.create(spark.createDataFrame([(2, 2.0)], DDL))
+
+    cdc_foreach_batch(t, ["id"], DDL)(batch, 0)
+    assert log.read_text().splitlines() == ["read"]
+    assert _state(t) == [(1, 1.5), (3, 3.0)]
+
+
+def test_cdc_empty_batch_publishes_nothing(spark, tmp_path):
+    """An empty micro-batch commits no version: no empty merge per
+    trigger. The guard lives in the apply: a direct merge of an empty
+    source still commits."""
+    t = TxnTable(spark, str(tmp_path / "t"))
+    t.create(spark.createDataFrame([(1, 1.0)], DDL))
+    v0 = t.latest_version()
+    cdc_foreach_batch(t, ["id"], DDL)(
+        spark.createDataFrame([], QUEUE_SCHEMA_DDL), 0)
+    assert t.latest_version() == v0
+    assert _state(t) == [(1, 1.0)]
+    t.merge(spark.createDataFrame([], DDL + ", _op string"), on=["id"],
+            delete_when="_op = 'd'")
+    assert t.latest_version() == v0 + 1
 
 
 def test_cdc_batching_invariance_random(spark, tmp_path):
