@@ -209,8 +209,9 @@ class LakehouseCatalog:
         self._seen_version = -2           # forces the first refresh
         self._refresh()
         # one catalog construction makes the whole surface available:
-        # spark.read/write.format("txlog") works without a separate
-        # registration call (idempotent; headless sessions included)
+        # spark.read / write / writeStream.format("txlog") work without
+        # a separate registration call (idempotent; headless sessions
+        # included)
         try:
             from aws_payment_data_lake_spark.sources.txlog_batch import (
                 register_txlog_source,

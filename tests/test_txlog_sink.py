@@ -279,3 +279,44 @@ def test_default_app_id_is_checkpoint_scoped(spark, tmp_path):
     assert _state(t) == [(1, 1.0, "a"), (2, 2.0, "b")]
     txns = t._replay().txns
     assert len([a for a in txns if a.startswith("txlog-sink:")]) == 2
+
+
+def test_one_registration_serves_read_write_and_write_stream(
+        spark, tmp_path):
+    """`format("txlog")` answers read, write and writeStream whatever
+    the session registered last: a sink-fed table is then read and
+    appended to by plain Spark, and a writeStream started after the
+    catalog's registration still streams."""
+    from aws_payment_data_lake_spark.sources.txlog_batch import (
+        register_txlog_source,
+    )
+
+    tpath = str(tmp_path / "t")
+    TxnTable(spark, tpath).create(spark.createDataFrame([], DDL))
+    src = str(tmp_path / "in")
+    _feed(src, [(1, 1.0, "a"), (2, 2.0, "b")])
+    _stream(spark, src, tpath, str(tmp_path / "ck1"))   # sink first
+
+    def read():
+        return sorted((r["id"], r["v"], r["tag"]) for r in
+                      spark.read.format("txlog").option("path", tpath)
+                      .load().collect())
+
+    assert read() == [(1, 1.0, "a"), (2, 2.0, "b")]
+    (spark.createDataFrame([(3, 3.0, "c")], DDL)
+     .write.format("txlog").mode("append").option("path", tpath)
+     .save())
+    assert read() == [(1, 1.0, "a"), (2, 2.0, "b"), (3, 3.0, "c")]
+
+    register_txlog_source(spark)                        # source last
+    src2 = str(tmp_path / "in2")
+    _feed(src2, [(4, 4.0, "d")])
+    q = (spark.readStream.schema(DDL).json(src2)
+         .writeStream.format("txlog")
+         .option("path", tpath)
+         .option("checkpointLocation", str(tmp_path / "ck2"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert read() == [(1, 1.0, "a"), (2, 2.0, "b"), (3, 3.0, "c"),
+                      (4, 4.0, "d")]
